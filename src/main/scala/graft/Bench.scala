@@ -133,7 +133,7 @@ object Bench {
       val t0 = System.nanoTime()
       try {
         evaluate(fn(spark, sfDir))
-        // clamp at 0: builds are timed exclusively (Memo.timedBuild), but
+        // clamp at 0: Memo times builds exclusively, but
         // measurement noise around a build-dominated query must never
         // produce a negative net time — the -1 sentinel means CRASH only
         val dt = math.max(0.0, (System.nanoTime() - t0) / 1e9 - drainInto())

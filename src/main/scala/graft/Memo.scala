@@ -1,44 +1,63 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped materialization cache for SHARED QUERY CORES — the
-  * relations several registered queries are composed from (d6's cluster
-  * labels, the d2 LSH candidate pairs, tx9's scored TF-IDF pairs). Without
-  * it, every composing query re-runs the core's shuffles: tx17 paid tx9's
-  * whole candidate join again (1.9 s at sf0.1), and d2/d4/d10/d6 each
-  * re-ran the signature + band self-join (~1.2 s × 3 redundant runs).
+/** The engine's one result cache: shared query cores and driver-side
+  * values are built once and reused until their source changes.
   *
-  * Entries are localCheckpoint(true)-materialized DataFrames keyed by
-  * (session, data dir, core tag, SOURCE MTIME): regenerating the source
-  * parquet at the same path invalidates the entry instead of serving stale
-  * results (the KMeansCodebook fingerprint contract), and entries of
-  * stopped sessions are purged on access — their checkpoint RDDs die with
-  * the session, and the map must not pin dead sessions in a long-lived JVM
-  * (the Dedup.clusterCache contract, ADVICE r3, now shared here).
+  *  - '''What it holds.''' [[cached]] / [[cachedParquet]] hold SHARED
+  *    QUERY CORES, the relations several registered queries compose from
+  *    (d6's cluster labels, the d2 LSH pairs, tx9's scored pairs); without
+  *    them tx17 re-paid tx9's candidate join (1.9 s at sf0.1) and d2/d4/
+  *    d10/d6 each re-ran the band self-join. [[value]] holds DRIVER-SIDE
+  *    values that plan construction needs (row counts, tip heights, trained
+  *    codebooks, merge lists), so constructing a plan never re-runs them.
+  *  - '''Key.''' (scope, data dir, tag, key parts, source fingerprint).
+  *    `tag` names the build in logs; per-call parameters (k/iters, a
+  *    needle, a mode flag) go in the key parts.
+  *  - '''Fingerprint.''' The Hadoop `FileSystem` status (mtime, length) of
+  *    `srcFile` under `dir`, so regenerating the source at the same path
+  *    invalidates its entries on any filesystem (`file:`, `hdfs://`,
+  *    `s3a://`). A missing source throws, naming the path: it must never
+  *    key an entry that outlives the file's appearance.
+  *  - '''Scope.''' Frames are SESSION-scoped: their checkpoint RDDs and
+  *    scratch die with the session, so entries of stopped sessions are
+  *    purged on access and the map never pins a dead session. Values are
+  *    plain driver data and JVM-scoped (valid across sessions).
+  *  - '''Attribution.''' Every build is timed as its tag's build (exclusive
+  *    of nested builds) and drained by Bench as a `memo:<tag>` line item.
+  *  - '''Cleanup.''' [[cachedParquet]] scratch lives under
+  *    `java.io.tmpdir/graft-memo-<appId>` and is deleted at application end.
   *
-  * At 100 TB this is exactly the "materialize the candidate-pair /
-  * cluster-label intermediate once" step a real pipeline persists to
-  * storage between stages; in-session localCheckpoint is the single-JVM
-  * equivalent (MEMORY_AND_DISK, spills instead of OOM-ing).
+  * Lookups are get/putIfAbsent rather than computeIfAbsent: cores COMPOSE
+  * (the LSH pair core builds on the hashed-shingle core), so a build may
+  * re-enter this cache, and a nested computeIfAbsent on one
+  * ConcurrentHashMap throws "Recursive update". The benign race (two
+  * threads both building, the loser's result dropped) is acceptable: Bench
+  * and Verify run queries sequentially, and correctness is unaffected.
+  *
+  * At 100 TB this is the "materialize the candidate-pair / cluster-label
+  * intermediate once" step a real pipeline persists between stages;
+  * in-session localCheckpoint is the single-JVM equivalent
+  * (MEMORY_AND_DISK, spills instead of OOM-ing).
   */
 object Memo {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, Long), DataFrame]()
+  private final case class Key(scope: Option[SparkSession], dir: String,
+                               tag: String, parts: Seq[Any], fp: (Long, Long))
 
-  /** Wall-clock of every core build this JVM has run, drained by Bench:
+  private val cache = new java.util.concurrent.ConcurrentHashMap[Key, AnyRef]()
+
+  /** Wall-clock of every build this JVM has run, drained by Bench:
     * memoization made per-query bench attribution ORDER-DEPENDENT (the
     * first query touching a shared core paid its build — d10 0.18 s vs
-    * d2 0.06 s in BENCH_r08 only because d10 sorts first), so Bench now
+    * d2 0.06 s in BENCH_r08 only because d10 sorts first), so Bench
     * subtracts in-query build time from the enclosing query and emits each
     * build as its own `memo:<tag>` line item (VERDICT r8 item 3). Builds
     * outside Bench (Verify, specs) accumulate harmlessly until drained. */
   private val buildLog =
     new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-
-  /** Record a core build (also used by KMeansCodebook's training, which is
-    * the same build-once-compose-many shape outside this cache). */
-  def logBuild(tag: String, sec: Double): Unit = buildLog.add((tag, sec))
 
   /** Per-thread stack of in-progress build frames; each frame accumulates
     * the wall-clock of its DIRECT child builds so a parent logs only its
@@ -52,8 +71,8 @@ object Memo {
   }
 
   /** Time `f` as the build of `tag`, logging EXCLUSIVE seconds (total
-    * minus nested timedBuild spans on this thread). */
-  def timedBuild[T](tag: String)(f: => T): T = {
+    * minus nested build spans on this thread). */
+  private def timedBuild[T](tag: String)(f: => T): T = {
     val stack = frames.get()
     stack.push(Array(0.0))
     val t0 = System.nanoTime()
@@ -71,7 +90,7 @@ object Memo {
       // nothing to balance the subtraction (ADVICE r9).
       if (ok) {
         if (!stack.isEmpty) stack.peek()(0) += total
-        logBuild(tag, math.max(0.0, total - child))
+        buildLog.add((tag, math.max(0.0, total - child)))
       }
     }
   }
@@ -84,29 +103,48 @@ object Memo {
     out.toSeq
   }
 
-  /** The memoized core: `build` runs (and is eagerly materialized) only on
-    * the first call per (session, dir, tag, source-mtime). `srcFile` names
-    * the parquet the core derives from, relative to `dir`.
-    *
-    * get/putIfAbsent rather than computeIfAbsent: cores COMPOSE (the LSH
-    * pair core builds on the hashed-shingle core), so `build` may re-enter
-    * this cache for a different tag — a nested computeIfAbsent on the same
-    * ConcurrentHashMap throws "Recursive update". The benign race (two
-    * threads both building, loser's checkpoint dropped) is acceptable:
-    * Bench/Verify run queries sequentially, and correctness is unaffected. */
-  def cached(s: SparkSession, dir: String, tag: String, srcFile: String)(
-      build: => DataFrame): DataFrame = {
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val fp = new java.io.File(s"$dir/$srcFile").lastModified
-    val key = (s, dir, tag, fp)
+  /** (mtime, length) of `dir/srcFile` through its Hadoop FileSystem. */
+  private def fingerprint(s: SparkSession, dir: String,
+                          srcFile: String): (Long, Long) = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$srcFile")
+    val st =
+      try p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p)
+      catch {
+        case e: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(s"Memo source $p does not exist", e)
+      }
+    (st.getModificationTime, st.getLen)
+  }
+
+  /** The one lookup every entry point shares: purge entries of stopped
+    * sessions, fingerprint the source, and on a miss run `build` (given
+    * the fingerprint) as the timed build of `tag`. */
+  private def memo[T](s: SparkSession, scope: Option[SparkSession],
+                      dir: String, srcFile: String, tag: String,
+                      parts: Seq[Any])(build: ((Long, Long)) => T): T = {
+    cache.keySet.removeIf(_.scope.exists(_.sparkContext.isStopped))
+    val fp = fingerprint(s, dir, srcFile)
+    val key = Key(scope, dir, tag, parts, fp)
     val hit = cache.get(key)
-    if (hit != null) hit
+    if (hit != null) hit.asInstanceOf[T]
     else {
-      val built = timedBuild(tag)(build.localCheckpoint(true))
+      val built = timedBuild(tag)(build(fp)).asInstanceOf[AnyRef]
       val prev = cache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+      (if (prev != null) prev else built).asInstanceOf[T]
     }
   }
+
+  /** A driver-side value derived from `dir/srcFile`, built once per
+    * (dir, tag, key parts, fingerprint) for the life of the JVM. */
+  def value[T](s: SparkSession, dir: String, srcFile: String, tag: String,
+               keyParts: Any*)(build: => T): T =
+    memo(s, None, dir, srcFile, tag, keyParts)(_ => build)
+
+  /** A shared core, localCheckpoint-materialized once per
+    * (session, dir, tag, fingerprint). */
+  def cached(s: SparkSession, dir: String, tag: String, srcFile: String)(
+      build: => DataFrame): DataFrame =
+    memo(s, Some(s), dir, srcFile, tag, Nil)(_ => build.localCheckpoint(true))
 
   /** [[cached]] for INDEX-SIZED cores: materialize as compressed parquet
     * in a session-scoped scratch dir instead of a serialized RDD
@@ -115,57 +153,61 @@ object Memo {
     * (~1.5 B (gram, doc_id) rows) ENOSPC'd the box at ~30 GB where
     * parquet's dictionary + RLE holds the same relation in a few GB —
     * and parquet IS the artifact a production build persists anyway (the
-    * bucketed-layout story BucketingSpec drives). Session-scoped path,
-    * so staleness across code changes is impossible (same lifetime as a
-    * checkpoint); same (session, dir, tag, mtime) keying, same build
-    * attribution. */
+    * bucketed-layout story BucketingSpec drives). */
   def cachedParquet(s: SparkSession, dir: String, tag: String,
-                    srcFile: String)(build: => DataFrame): DataFrame = {
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val fp = new java.io.File(s"$dir/$srcFile").lastModified
-    val key = (s, dir, tag, fp)
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      val built = timedBuild(tag) {
-        // The scratch path carries EVERY cache-key component that varies
-        // within a session: tag, DATA DIR (hashed — two scale dirs used in
-        // one session share tags, and dirs generated together share
-        // mtimes; omitting the dir made the second build overwrite the
-        // parquet backing the first's still-cached DataFrame, ADVICE r12),
-        // and source mtime.
-        val dirHash = java.lang.Integer.toHexString(dir.hashCode)
-        val path = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          s"graft-memo-${s.sparkContext.applicationId}",
-          s"${tag}_${dirHash}_$fp")
-        // Build into a unique temp dir and atomically rename: two threads
-        // racing the first call would otherwise both write THE SAME final
-        // path with mode=overwrite, and the loser's overwrite races the
-        // winner's readers (ADVICE r12 — computeIfAbsent is not an option
-        // here, cores compose and re-enter this map). rename(2) of a
-        // directory fails if the target exists, so exactly one build
-        // lands; the loser discards its files and reads the winner's.
-        val tmp = java.nio.file.Paths.get(
-          path.toString + "_tmp_" + java.util.UUID.randomUUID().toString)
-        build.write.mode("overwrite").parquet(tmp.toString)
-        try java.nio.file.Files.move(tmp, path,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case e: java.nio.file.FileSystemException =>
-            // rename refused. If the target exists we lost the race (or a
-            // prior run of this app left it) — it is a COMPLETE index for
-            // this exact (tag, dirHash, mtime) key, so drop ours and read
-            // theirs; anything else is a real failure and must surface.
-            if (!java.nio.file.Files.exists(path)) throw e
-            deleteRecursively(tmp.toFile)
-        }
-        s.read.parquet(path.toString)
+                    srcFile: String)(build: => DataFrame): DataFrame =
+    memo(s, Some(s), dir, srcFile, tag, Nil) { case (mtime, len) =>
+      val root = scratchRoot(s.sparkContext)
+      // The scratch path carries EVERY cache-key component that varies
+      // within a session: tag, DATA DIR (hashed — two scale dirs used in
+      // one session share tags, and dirs generated together share
+      // mtimes; omitting the dir made the second build overwrite the
+      // parquet backing the first's still-cached DataFrame, ADVICE r12),
+      // and the source fingerprint.
+      val dirHash = java.lang.Integer.toHexString(dir.hashCode)
+      val path = root.resolve(s"${tag}_${dirHash}_${mtime}_$len")
+      // Build into a unique temp dir and atomically rename: two threads
+      // racing the first call would otherwise both write THE SAME final
+      // path with mode=overwrite, and the loser's overwrite races the
+      // winner's readers (ADVICE r12). rename(2) of a directory fails if
+      // the target exists, so exactly one build lands; the loser discards
+      // its files and reads the winner's.
+      val tmp = java.nio.file.Paths.get(
+        path.toString + "_tmp_" + java.util.UUID.randomUUID().toString)
+      build.write.mode("overwrite").parquet(tmp.toString)
+      try java.nio.file.Files.move(tmp, path,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      catch {
+        case e: java.nio.file.FileSystemException =>
+          // rename refused. If the target exists we lost the race (or a
+          // prior run of this app left it) — it is a COMPLETE index for
+          // this exact key, so drop ours and read theirs; anything else
+          // is a real failure and must surface.
+          if (!java.nio.file.Files.exists(path)) throw e
+          deleteRecursively(tmp.toFile)
       }
-      val prev = cache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+      s.read.parquet(path.toString)
     }
+
+  /** Contexts whose scratch root already has a cleaner registered. */
+  private val cleaned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** `graft-memo-<appId>` under java.io.tmpdir, with one listener per
+    * context that deletes it when the application ends. */
+  private def scratchRoot(sc: SparkContext): java.nio.file.Path = {
+    val root = scratchRootOf(sc.applicationId)
+    if (cleaned.add(sc.applicationId)) sc.addSparkListener(scratchCleaner(root))
+    root
   }
+
+  private[graft] def scratchRootOf(appId: String): java.nio.file.Path =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), s"graft-memo-$appId")
+
+  private[graft] def scratchCleaner(root: java.nio.file.Path): SparkListener =
+    new SparkListener {
+      override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+        deleteRecursively(root.toFile)
+    }
 
   private def deleteRecursively(f: java.io.File): Unit = {
     val kids = f.listFiles()

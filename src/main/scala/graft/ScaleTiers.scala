@@ -46,14 +46,10 @@ object ScaleTiers {
     * between those measured points, with headroom over sf10. */
   val ExactTierMaxDocs = 1000000L
 
-  /** One metadata-grain count per (dir, mtime) — the decision input. */
-  private val nDocs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-  private def docCount(s: SparkSession, dir: String): Long = {
-    val fp = new java.io.File(s"$dir/documents.parquet").lastModified
-    nDocs.computeIfAbsent((dir, fp),
-      _ => Tables.documents(s, dir).count()).longValue
-  }
+  /** One metadata-grain count, memoized — the decision input. */
+  private def docCount(s: SparkSession, dir: String): Long =
+    Memo.value(s, dir, "documents.parquet", "documents_rowcount")(
+      Tables.documents(s, dir).count())
 
   /** The query names a scale harness must SKIP for `dir` — empty below
     * the ceiling (every gate scale), the exact tier above it. */

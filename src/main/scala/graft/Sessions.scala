@@ -33,15 +33,9 @@ object Sessions {
       // sf100 rehearsal a 32-way shuffle meant 2 GB sort/hash partitions —
       // the source of a13's 12.8× and f1's 17.8× per-decade superlinearity
       // (spill, not compute). 512 initial keeps those partitions ≤ ~125 MB.
-      // On a real cluster this is exactly AQE's documented role; the env
-      // override exists for A/B probes, not production tuning.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "512"))
-      // A/B probe knob only (default = Spark's default, on): lets a dev
-      // measure AQE's per-stage orchestration share on the round-loop
-      // families without rebuilding.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // On a real cluster this is exactly AQE's documented role.
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       // NOT set: spark.serializer=Kryo — A/B'd for the r14 RDD round loops
       // (graph family) and measured a wash at gate scale (the loop shuffles

@@ -299,7 +299,7 @@ object Retrieval {
     * almost every document on its FIRST, most selective gram probe and the
     * common grams are only ever tested on documents the rare ones already
     * passed. Gram dfs come from one bounded sample pass ([[gramOrder]],
-    * memoized per (dir, needle, mtime)); ordering affects only the plan —
+    * memoized per (dir, needle)); ordering affects only the plan —
     * conjunction commutes — so the sampled estimate can never change the
     * answer. Survivors take the exact occurrence count (trigram
     * containment is necessary, not sufficient), which is what makes the
@@ -330,14 +330,11 @@ object Retrieval {
     * with contains() probes over a 1-in-64 doc_id sample (one row-local
     * scan of ~1.6% of the corpus, k longs collected — geometry-bounded),
     * ties broken lexically so the order is deterministic. Memoized per
-    * (dir, needle, source mtime) and routed through Memo.timedBuild, so
-    * plan construction never re-runs the sample (the orderRows contract)
-    * and Bench attributes the one pass to its own builds line; an
-    * explicit frame with no dir (spec fixtures) just computes. An empty
+    * (dir, needle) through Memo.value, so plan construction never re-runs
+    * the sample and Bench attributes the one pass to its own builds line;
+    * an explicit frame with no dir (spec fixtures) just computes. An empty
     * sample degrades to lexical order — still correct, conjunction
     * commutes. */
-  private val gramOrderCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), Seq[String]]()
   private[graft] def gramOrder(docs: DataFrame, needle: String,
                                dir: Option[String] = None): Seq[String] = {
     val grams = needle.sliding(3).toSeq.distinct
@@ -356,9 +353,8 @@ object Retrieval {
     }
     dir match {
       case Some(d) =>
-        val fp = new java.io.File(s"$d/documents.parquet").lastModified
-        gramOrderCache.computeIfAbsent((d, needle, fp),
-          _ => graft.Memo.timedBuild("tx16_gram_dfs")(measure()))
+        graft.Memo.value(docs.sparkSession, d, "documents.parquet",
+          "tx16_gram_dfs", needle)(measure())
       case None => measure()
     }
   }

@@ -765,17 +765,12 @@ object TextQueries {
       .toDF("round", "sym_a", "sym_b", "pair_count")
       .orderBy(col("round"))
 
-  /** The corpus merge sequence, memoized per (dir, mtime) — training is
-    * deterministic, and tx12b/tx12c must share ONE sequence (the
-    * fixedCodebook contract: the trained artifact is driver data). */
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[(Long, String, String, Long)]]()
-  private[graft] def corpusMerges(s: SparkSession, d: String): Seq[(Long, String, String, Long)] = {
-    val fp = new java.io.File(s"$d/documents.parquet").lastModified
-    mergeCache.computeIfAbsent((d, fp), _ =>
-      graft.Memo.timedBuild("bpe_merges")(
-        bpeMergeList(vocabOf(Tables.documents(s, d)), BpeMergeRounds)))
-  }
+  /** The corpus merge sequence, memoized — training is deterministic, and
+    * tx12b/tx12c must share ONE sequence (the fixedCodebook contract: the
+    * trained artifact is driver data). */
+  private[graft] def corpusMerges(s: SparkSession, d: String): Seq[(Long, String, String, Long)] =
+    graft.Memo.value(s, d, "documents.parquet", "bpe_merges")(
+      bpeMergeList(vocabOf(Tables.documents(s, d)), BpeMergeRounds))
 
   // ---------------------------------------------------------------------
   // BATCHED BPE TRAINING (tx12d/tx12e) — VERDICT r11 weak #1: the
@@ -895,16 +890,12 @@ object TextQueries {
     out.toSeq
   }
 
-  private val batchedMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Boolean), Seq[(Long, Long, String, String, Long)]]()
   private[graft] def corpusBatchedMerges(s: SparkSession, d: String,
-                                         strict: Boolean): Seq[(Long, Long, String, String, Long)] = {
-    val fp = new java.io.File(s"$d/documents.parquet").lastModified
-    batchedMergeCache.computeIfAbsent((d, fp, strict), _ =>
-      graft.Memo.timedBuild(if (strict) "bpe_batched_exact" else "bpe_batched")(
-        bpeMergeListBatched(vocabOf(Tables.documents(s, d)),
-          BpeBatchRounds, BpeBatchTop, BpeBatchScan, strict)))
-  }
+                                         strict: Boolean): Seq[(Long, Long, String, String, Long)] =
+    graft.Memo.value(s, d, "documents.parquet",
+      if (strict) "bpe_batched_exact" else "bpe_batched", strict)(
+      bpeMergeListBatched(vocabOf(Tables.documents(s, d)),
+        BpeBatchRounds, BpeBatchTop, BpeBatchScan, strict))
 
   private def batchedMergesDf(s: SparkSession, strict: Boolean, d: String): DataFrame =
     s.createDataFrame(corpusBatchedMerges(s, d, strict))

@@ -559,16 +559,10 @@ object Dedup {
     * component). Pairs → clusters → survivors is the step a real dedup
     * pipeline runs after candidate generation — without it, A~B and B~C
     * would keep A and B (pairwise drops are order-dependent). */
-  /** d6's star loop runs Spark actions at plan-construction time (like
-    * k-means training); memoize the checkpointed label frame per
-    * (session, dir) so plan-only consumers (plan invariants, repeated
-    * spec calls) don't re-run the LSH join + rounds. Entries of stopped
-    * sessions are purged on access — their localCheckpoint RDDs die with
-    * the session, and the map must not pin dead sessions in a long-lived
-    * JVM (ADVICE r3). */
-  /** Memoized labels keyed by (session, dir, edge-set tag, SOURCE MTIME) —
-    * the [[graft.Memo]] shared-core contract (mtime invalidation, stopped-
-    * session purge), which this cache predates and now delegates to. */
+  /** The star loop runs Spark actions at plan-construction time, so the
+    * labels are a [[graft.Memo]] core per edge-set tag: plan-only
+    * consumers (plan invariants, repeated spec calls) never re-run the
+    * pair join + rounds. */
   private def cachedLabels(s: SparkSession, d: String, tag: String,
                            srcFile: String)(pairs: => DataFrame): DataFrame =
     graft.Memo.cached(s, d, s"cc_$tag", srcFile)(connectedComponents(pairs))
@@ -597,12 +591,13 @@ object Dedup {
     * [[connectedComponents]]; the oracle is the full transitive closure of
     * d5's pair set.
     *
-    * r13 (optimization): the labels are served from the SAME memoized core
-    * as d7b — the exact-duplicate collapse is closure-preserving ON ANY
-    * INPUT (the [[d7bEdges]] proof; law-checked against the raw d5 pair
-    * closure on the gate corpus AND on planted replica cliques in
-    * NorthStarSpec), so running CC twice per session over two
-    * provably-equal edge sets bought nothing: one redundant CC build
+    * r13 (optimization): the labels come from d7b's collapsed edge set
+    * and d7b is registered to this same definition — the exact-duplicate
+    * collapse is closure-preserving ON ANY INPUT (the [[d7bEdges]] proof;
+    * law-checked against the raw d5 pair closure on the gate corpus AND
+    * on planted replica cliques in NorthStarSpec), so running CC twice per
+    * session over two provably-equal edge sets bought nothing: one
+    * redundant CC build
     * (~4.4 s at sf0.1) dropped, and d7 loses the answer-bound raw pair
     * relation that ENOSPC'd it at sf100 — it leaves the exact-groundtruth
     * skip tier. The raw-edge path stays alive (d5 is its own registered
@@ -619,8 +614,9 @@ object Dedup {
       .orderBy(col("vec_id"))
   }
 
-  /** D7B — embedding clustering with EXACT-DUPLICATE COLLAPSE: the
-    * production twin of d7, found the honest way (round 12's first
+  /** d7b's collapsed edge set over any assigned frame — exposed so the
+    * closure-equivalence law can drive planted replica frames.
+    * EXACT-DUPLICATE COLLAPSE, found the honest way (round 12's first
     * full-suite sf100 run ENOSPC'd d7 — its edge set is d5's pair
     * relation, which is answer-bound quadratic under the replica cliques:
     * every pair of identical copies passes the threshold). The collapse
@@ -641,8 +637,6 @@ object Dedup {
     * while pair work drops from Σ group² to distinct-vector pairs:
     * the sf100 cliques collapse 1000× before any self-join. Organic
     * corpora (no exact dups) pass through unchanged. */
-  /** d7b's collapsed edge set over any assigned frame — exposed so the
-    * closure-equivalence law can drive planted replica frames. */
   private[graft] def d7bEdges(asg: DataFrame): DataFrame = {
     val gid = asg.groupBy(col("v")).agg(min(col("vec_id")).as("gid"))
     val withG = asg.join(gid, Seq("v"))
@@ -652,18 +646,6 @@ object Dedup {
       .select(col("vec_id"), col("v"), col("norm"), col("cell_id"))
     star.unionByName(
       d5PairsOver(reps).select(col("v1").as("x"), col("v2").as("y")))
-  }
-
-  private val d7b: Q = (s, d) => {
-    val labels = cachedLabels(s, d, "emb_grouped", "embeddings.parquet")(
-      d7bEdges(Similarity.scaledAssigned(s, d)))
-      .withColumnRenamed("doc_id", "vec_id")
-    Tables.embeddings(s, d).select(col("vec_id"))
-      .join(labels, Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("label"), col("vec_id")).as("cluster_id"))
-      .withColumn("is_canonical", col("vec_id") === col("cluster_id"))
-      .orderBy(col("vec_id"))
   }
 
   /** 32-bit SimHash over DISTINCT SHINGLES — d3's digit-vote rule extended
@@ -733,10 +715,11 @@ object Dedup {
     * scale the clusterer is modality-blind — only candidate generation
     * changes.
     *
-    * r13 (optimization): labels served from d8b's memoized core — the
-    * exact-signature collapse is closure-preserving on any input (the
-    * [[d8bEdges]] proof, law-checked against the raw d8Pairs closure on
-    * the gate corpus and planted signature cliques), so the second CC
+    * r13 (optimization): labels come from d8b's collapsed edge set, and
+    * d8b is registered to this same definition — the exact-signature
+    * collapse is closure-preserving on any input (the [[d8bEdges]] proof,
+    * law-checked against the raw d8Pairs closure on the gate corpus and
+    * planted signature cliques), so the second CC
     * build (~5.1 s at sf0.1) was pure redundancy and the raw Σ bucket²
     * band self-join (d8's sf100 ENOSPC) leaves the query's plan; d8
     * leaves the exact-groundtruth skip tier. The raw band self-join
@@ -754,7 +737,9 @@ object Dedup {
   }
 
   /** d8b's collapsed edge set over a (doc_id, sh) signature frame — the
-    * d7b trick at signature grain. Identical signatures are hamming-0
+    * d7b trick at signature grain (round 12's first full-suite sf100 run
+    * ENOSPC'd the raw form: the replica cliques put 1000 identical
+    * signatures in every band bucket). Identical signatures are hamming-0
     * pairs sharing every band (so every within-group star edge IS a d8
     * edge), and a dropped cross-group pair's representatives carry the
     * SAME two signatures — same shared band, same hamming — so the rep
@@ -768,23 +753,6 @@ object Dedup {
       .select(col("doc_id"), col("sh"))
     star.unionByName(d8PairsFrom(simBands(reps))
       .select(col("d1").as("x"), col("d2").as("y")))
-  }
-
-  /** D8B — SimHash clustering with EXACT-SIGNATURE COLLAPSE: d8's
-    * production twin (round 12: the first full-suite sf100 run ENOSPC'd
-    * d8 — the replica cliques put 1000 identical signatures in every
-    * band bucket, Σ bucket² pairs before the verify). Same closure,
-    * provably (see [[d8bEdges]]), pair work at distinct-signature grain:
-    * the cliques collapse 1000× before the band self-join. */
-  private val d8b: Q = (s, d) => {
-    val labels = cachedLabels(s, d, "simhash_grouped", "documents.parquet")(
-      d8bEdges(simhashFrame(s, d).localCheckpoint(true)))
-    Tables.documents(s, d).select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("cluster_id"))
-      .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
-      .orderBy(col("doc_id"))
   }
 
   /** PX4 — train/test DECONTAMINATION: flag test-split documents sharing
@@ -1466,9 +1434,11 @@ object Dedup {
     "d5_embedding_neardup" -> d5,
     "d6_neardup_clusters" -> d6,
     "d7_embedding_clusters" -> d7,
-    "d7b_embedding_clusters_grouped" -> d7b,
+    // d7b/d8b: the exact-duplicate / exact-signature collapse IS d7's and
+    // d8's plan since r13, so each pair serves one definition
+    "d7b_embedding_clusters_grouped" -> d7,
     "d8_simhash_clusters" -> d8,
-    "d8b_simhash_clusters_grouped" -> d8b,
+    "d8b_simhash_clusters_grouped" -> d8,
     "px4_decontaminate" -> px4,
     "px22_eval_scrub" -> px22,
     "px22b_eval_scrub_capped" -> px22b,
@@ -1582,7 +1552,7 @@ object Dedup {
     // side never materializes a closure at any scale
     "d7_embedding_clusters" -> d7ClosureSqlFor(s, d),
     // d7b's output is PROVABLY identical to d7's (the exact-duplicate
-    // collapse is closure-preserving — see d7b's scaladoc), so one oracle
+    // collapse is closure-preserving — see d7bEdges), so one oracle
     // text holds both gates to one truth (the tx13c convention)
     "d7b_embedding_clusters_grouped" -> d7ClosureSqlFor(s, d))
 

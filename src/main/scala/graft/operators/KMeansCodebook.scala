@@ -131,31 +131,20 @@ object KMeansCodebook {
       .withColumn("cnorm", sqrt(call_function("graft_dot", col("cv"), col("cv"))))
   }
 
-  /** Training is deterministic per (dir, k, iters, data), so centroids
-    * memoize — without this, every CONSTRUCTION of an x3b plan (e.g.
-    * plan-shape specs that never execute the query) would re-run the full
-    * training actions. The cached value is plain driver-side data, valid
-    * across sessions. The key carries the source file's mtime fingerprint:
-    * regenerating testdata at the same path invalidates the entry instead
-    * of serving a stale codebook (ADVICE r3). */
-  private val trained =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Long), Seq[(Int, Seq[Double])]]()
-
   /** The memoized trained centroids for the embeddings table of `d` —
     * driver-side data, the artifact a consumer embeds as literals
-    * (Similarity.ivfCands) or broadcasts. */
+    * (Similarity.ivfCands) or broadcasts. Training is deterministic per
+    * (dir, k, iters, data), so centroids memoize: without this, every
+    * CONSTRUCTION of an x3b plan (e.g. plan-shape specs that never execute
+    * the query) would re-run the full training actions. */
   def centroidsFor(s: SparkSession, d: String, k: Int,
-                   iters: Int): Seq[(Int, Seq[Double])] = {
-    val fp = new java.io.File(s"$d/embeddings.parquet").lastModified
-    trained.computeIfAbsent((d, k, iters, fp), { _ =>
-      val v = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      // same bench-attribution contract as Memo cores: training runs once,
-      // whichever query constructs first must not be charged for it;
-      // timedBuild keeps nested spans exclusive (cell_asg wraps this)
-      graft.Memo.timedBuild(s"kmeans_k${k}_i$iters")(train(v, k, iters))
-    })
-  }
+                   iters: Int): Seq[(Int, Seq[Double])] =
+    graft.Memo.value(s, d, "embeddings.parquet", s"kmeans_k${k}_i$iters",
+      k, iters) {
+      train(Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
+        k, iters)
+    }
 
   /** Convenience: train on the embeddings table of `d` (memoized). */
   def forEmbeddings(s: SparkSession, d: String, k: Int, iters: Int): DataFrame =

@@ -1,9 +1,11 @@
 package graft
 
-/** Laws of the shared-core materialization cache (VERDICT r7 item 1): the
-  * memo is what keeps composed queries (px5/tx17/TrainingPipeline) from
-  * re-running the d2/d6/tx9 cores, so its caching contract needs gates of
-  * its own — build-once, mtime invalidation, and per-tag isolation. */
+/** Laws of the engine's one result cache (VERDICT r7 item 1): the memo is
+  * what keeps composed queries (px5/tx17/TrainingPipeline) from re-running
+  * the d2/d6/tx9 cores and plan construction from re-running driver-side
+  * values, so its contract needs gates of its own — build-once, source
+  * fingerprint invalidation on any filesystem, loud failure on a missing
+  * source, per-tag isolation, build attribution and scratch cleanup. */
 class MemoSpec extends SparkSpec {
   test("cached builds once per (dir, tag, mtime) and serves the same frame") {
     var builds = 0
@@ -100,5 +102,57 @@ class MemoSpec extends SparkSpec {
     val leftovers = Option(scratch.list()).getOrElse(Array.empty[String])
       .filter(n => n.startsWith("memospec_pq_race") && n.contains("_tmp_"))
     assert(leftovers.isEmpty, s"loser temp dirs must be cleaned: ${leftovers.toSeq}")
+  }
+
+  test("a dir given as a file: URI rebuilds after its source is rewritten") {
+    val dir = java.nio.file.Files.createTempDirectory("memospec_uri").toFile
+    val src = new java.io.File(dir, "documents.parquet")
+    java.nio.file.Files.writeString(src.toPath, "v1")
+    val uri = s"file:${dir.getPath}"
+    var builds = 0
+    def build = {
+      builds += 1
+      Tables.documents(spark, sf).select("doc_id")
+    }
+    Memo.cached(spark, uri, "memospec_uri", "documents.parquet")(build)
+    Memo.cached(spark, uri, "memospec_uri", "documents.parquet")(build)
+    assert(builds === 1)
+    java.nio.file.Files.writeString(src.toPath, "version two")
+    assert(src.setLastModified(src.lastModified + 60000L))
+    Memo.cached(spark, uri, "memospec_uri", "documents.parquet")(build)
+    assert(builds === 2, "a rewritten source behind a file: URI must rebuild")
+  }
+
+  test("value on a dir with no source throws, naming the path") {
+    val dir = java.nio.file.Files.createTempDirectory("memospec_missing").toFile
+    val e = intercept[IllegalArgumentException](
+      Memo.value(spark, dir.getPath, "documents.parquet", "memospec_missing")(1L))
+    assert(e.getMessage.contains(s"${dir.getPath}/documents.parquet"), e.getMessage)
+  }
+
+  test("value builds once per key and logs exactly one build under its tag") {
+    var builds = 0
+    def build = { builds += 1; 41L + builds }
+    Memo.drainBuilds()
+    val a = Memo.value(spark, sf, "documents.parquet", "memospec_value", 1)(build)
+    // JVM-scoped: a sibling session is served the same value
+    val b = Memo.value(spark.newSession(), sf, "documents.parquet",
+      "memospec_value", 1)(build)
+    assert(builds === 1 && a === 42L && b === 42L)
+    assert(Memo.drainBuilds().count(_._1 == "memospec_value") === 1)
+    // a different key part is a different entry under the same tag
+    assert(Memo.value(spark, sf, "documents.parquet", "memospec_value", 2)(build) === 43L)
+    assert(builds === 2)
+    assert(Memo.drainBuilds().map(_._1) === Seq("memospec_value"))
+  }
+
+  test("scratch cleanup at application end removes a scratch root") {
+    // a fake appId's root: the shared session's own scratch must survive
+    val root = Memo.scratchRootOf("memospec-fake-app")
+    java.nio.file.Files.createDirectories(root.resolve("core_1_2/part"))
+    java.nio.file.Files.writeString(root.resolve("core_1_2/part/f.parquet"), "x")
+    Memo.scratchCleaner(root).onApplicationEnd(
+      org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
+    assert(!java.nio.file.Files.exists(root))
   }
 }
